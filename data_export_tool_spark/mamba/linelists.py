@@ -277,7 +277,7 @@ def tx_curr_outcome(
             & (F.col("art_dose_end") >= cutoff)
         )
 
-    latest_rn1 = cohort_at(end).cache()
+    latest_rn1 = cohort_at(end)
     latest = on_treatment(latest_rn1, end)
     latest_pedi = latest.filter(F.col("age") < 15)
     latest_2 = latest_rn1.filter(F.col("art_start_date") <= end)

@@ -13,13 +13,16 @@ shim into ``spark.sql``; DataFrame-built queries skip the shim.
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
 import os
 from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from data_export_tool_spark.plans.dialect import shim_mysql_to_spark
 from data_export_tool_spark.plans.report_window import ReportWindow, resolve_report_window
@@ -136,22 +139,34 @@ def run_export(
     When ``facility`` is None it is looked up from the warehouse's
     location tables, exactly as the reference does before its first
     query (export.py:257-279) — S4's two lookup joins via
-    ``mamba.facility.lookup_facility_identity``.
+    ``mamba.facility.lookup_facility_identity``. The lookup runs before
+    any report starts, so a warehouse without a facility aborts the
+    export before any CSV is written.
+
+    The reports run concurrently on one driver thread pool sized
+    ``min(len(reports), defaultParallelism)``: while one report is
+    being planned or written to CSV on the driver, the others' Spark
+    jobs keep the executor cores busy. Each report runs under the
+    caller's job group and local properties. Builders share the
+    session, so they must not change its state (SQL confs, temp views);
+    each one only builds and returns its DataFrame.
 
     SQL-text reports go through the FULL MySQL→Spark shim
     (``shim_mysql_to_spark`` + per-report ``QUERY_PATCHES``: Ethiopian
     calendar inlining, truthiness CASE rewrites, structural patches) —
     the same path the parity suite value-checks — with ANSI mode off
-    for MySQL's lenient casts. The prior ANSI setting is restored on
-    exit; that's safe here because every result is fully materialized
-    to CSV inside this function, unlike the lazy
-    ``run_reference_report`` path.
+    for MySQL's lenient casts. The prior ANSI setting is restored once
+    every report has finished, even when one raised; that's safe here
+    because every result is fully materialized to CSV inside this
+    function, unlike the lazy ``run_reference_report`` path.
 
     Returns name → written CSV path (None where the result was empty —
-    skipped, matching export.py:307-308). When ``zip_name`` is given
-    the CSVs are packaged into ``{zip_name}_packaged18.zip`` and, per
-    the reference's post-zip cleanup (export.py:317-326), the source
-    CSVs are deleted unless ``cleanup_csvs=False``.
+    skipped, matching export.py:307-308 — or where the report raised,
+    which is logged), in registry order: SQL-text reports, then
+    builders. When ``zip_name`` is given the CSVs are packaged into
+    ``{zip_name}_packaged18.zip`` and, per the reference's post-zip
+    cleanup (export.py:317-326), the source CSVs are deleted unless
+    ``cleanup_csvs=False``.
     """
     from data_export_tool_spark.mamba.reports import (
         QUERY_PATCHES,
@@ -166,38 +181,51 @@ def run_export(
 
     window = resolve_report_window(eth_month, eth_year)
     label = month_label or str(eth_month)
-    written: dict[str, str | None] = {}
+
+    def sql_report(name: str, sql: str) -> DataFrame:
+        if wide is not None:
+            sql = rewrite_follow_up_assembly(sql)
+        shimmed = shim_mysql_to_spark(sql, window.as_params(), QUERY_PATCHES.get(name))
+        return spark.sql(shimmed)
+
+    def run(name: str, build: Callable[[], DataFrame]) -> str | None:
+        # per-query isolation like the reference (export.py:287-293):
+        # one broken report logs and is skipped; the other reports
+        # still export and the zip is still produced
+        try:
+            return _sink(build(), out_dir, name, facility, label, eth_year)
+        except Exception:
+            logging.exception("Error executing query %r — skipping", name)
+            return None
 
     prior_ansi = spark.conf.get("spark.sql.ansi.enabled", None)
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    # one cached FollowUp wide view serves every report's CTE
-    # references (J10 — the shard assembly runs once per export, not
-    # per CTE alias per report; the 100k-patient e2e run's heap is
-    # bounded by ONE InMemoryRelation instead of ~130 broadcast maps)
-    wide = ensure_follow_up_wide(spark)
+    wide = None
     try:
-        for name, sql in registry.sql_queries.items():
-            # per-query isolation like the reference (export.py:287-293):
-            # one broken report logs and is skipped; the other reports
-            # still export and the zip is still produced
-            try:
-                if wide is not None:
-                    sql = rewrite_follow_up_assembly(sql)
-                shimmed = shim_mysql_to_spark(
-                    sql, window.as_params(), QUERY_PATCHES.get(name)
-                )
-                df = spark.sql(shimmed)
-                written[name] = _sink(df, out_dir, name, facility, label, eth_year)
-            except Exception:
-                logging.exception("Error executing query %r — skipping", name)
-                written[name] = None
-        for name, builder in registry.df_queries.items():
-            try:
-                df = builder(spark, window)
-                written[name] = _sink(df, out_dir, name, facility, label, eth_year)
-            except Exception:
-                logging.exception("Error executing query %r — skipping", name)
-                written[name] = None
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        # one cached FollowUp wide view serves every report's CTE
+        # references (J10 — the shard assembly runs once per export, not
+        # per CTE alias per report; the 100k-patient e2e run's heap is
+        # bounded by ONE InMemoryRelation instead of ~130 broadcast maps)
+        wide = ensure_follow_up_wide(spark)
+        tasks = [
+            (n, functools.partial(sql_report, n, sql))
+            for n, sql in registry.sql_queries.items()
+        ]
+        tasks += [
+            (n, functools.partial(builder, spark, window))
+            for n, builder in registry.df_queries.items()
+        ]
+        workers = max(1, min(len(tasks), spark.sparkContext.defaultParallelism))
+        # leaving the block waits for every report, so the finally
+        # below restores the session only once all of them are done
+        with ThreadPoolExecutor(max_workers=workers, thread_name_prefix="report") as pool:
+            # each task gets its own copy of the caller's local
+            # properties (job group, scheduler pool), taken here
+            futures = [
+                (name, pool.submit(inheritable_thread_target(spark)(run), name, build))
+                for name, build in tasks
+            ]
+        written = {name: future.result() for name, future in futures}
     finally:
         if wide is not None:
             wide.unpersist()

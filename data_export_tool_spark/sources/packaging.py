@@ -38,15 +38,21 @@ def zip_files_with_checksum(
     checksum_path = os.path.join(folder_path, f"{zip_name}_checksum.txt")
     final_zip_path = os.path.join(folder_path, f"{zip_name}_packaged18.zip")
 
-    csv_files = []
+    # sorted by archive name, so the member order does not depend on
+    # the order the reports' CSVs were written in
+    csv_files = sorted(
+        (
+            os.path.join(root_dir, fname)
+            for root_dir, _, files in os.walk(folder_path)
+            for fname in files
+            if fname.endswith(".csv")
+        ),
+        key=lambda fpath: os.path.relpath(fpath, folder_path),
+    )
     try:
         with zipfile.ZipFile(csv_archive_path, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root_dir, _, files in os.walk(folder_path):
-                for fname in files:
-                    if fname.endswith(".csv"):
-                        fpath = os.path.join(root_dir, fname)
-                        csv_files.append(fpath)
-                        zf.write(fpath, arcname=os.path.relpath(fpath, folder_path))
+            for fpath in csv_files:
+                zf.write(fpath, arcname=os.path.relpath(fpath, folder_path))
 
         with open(checksum_path, "w") as f:
             f.write(sha256_of(csv_archive_path))

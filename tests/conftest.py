@@ -62,6 +62,28 @@ def spark():
     yield spark
 
 
+def _temp_views(spark) -> set[str]:
+    return {r.viewName for r in spark.sql("SHOW VIEWS").collect() if r.isTemporary}
+
+
+@pytest.fixture(autouse=True)
+def _restore_session_state(request):
+    """Drop the temp views a test registers on the shared ``spark``
+    session and restore ``spark.sql.ansi.enabled``, which product code
+    flips, so no test depends on the tests that ran before it. Tests
+    that do not use the session skip this."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    spark = request.getfixturevalue("spark")
+    views = _temp_views(spark)
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    yield
+    for name in _temp_views(spark) - views:
+        spark.catalog.dropTempView(name)
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

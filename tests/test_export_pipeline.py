@@ -74,9 +74,14 @@ def test_empty_result_skipped(spark, tmp_path):
 # ---- zip + checksum (S7; export.py:145-210) -------------------------------
 
 
-def test_zip_checksum_structure(tmp_path):
+def test_zip_checksum_structure(tmp_path, monkeypatch):
     (tmp_path / "a.csv").write_text("x,y\n1,2\n")
     (tmp_path / "b.csv").write_text("x\n9\n")
+    # members go in by name, whatever order the directory lists them in
+    walk = os.walk
+    monkeypatch.setattr(
+        os, "walk", lambda p: ((d, s, sorted(f, reverse=True)) for d, s, f in walk(p))
+    )
     final = zip_files_with_checksum(str(tmp_path), "run1")
     assert os.path.basename(final) == "run1_packaged18.zip"
     with zipfile.ZipFile(final) as zf:
@@ -86,7 +91,7 @@ def test_zip_checksum_structure(tmp_path):
         inner = zf.read("run1.zip")
         assert checksum == hashlib.sha256(inner).hexdigest()
         with zipfile.ZipFile(zf.open("run1.zip")) as inner_zf:
-            assert sorted(inner_zf.namelist()) == ["a.csv", "b.csv"]
+            assert inner_zf.namelist() == ["a.csv", "b.csv"]
     # temporaries removed (export.py finally-block parity)
     assert not (tmp_path / "run1.zip").exists()
     assert not (tmp_path / "run1_checksum.txt").exists()
@@ -274,11 +279,17 @@ def test_connect_warehouse_partitions_follow_up_shards(spark):
         calls[table] = partition_column
         return spark.range(1).withColumnRenamed("id", "x")
 
-    reg.connect_warehouse(spark, reader=fake_reader)
-    assert set(calls) == set(all_table_schemas())
-    assert calls["mamba_flat_encounter_follow_up"] == "client_id"
-    assert calls["mamba_flat_encounter_follow_up_1"] == "client_id"
-    assert calls["mamba_dim_location"] is None
+    try:
+        reg.connect_warehouse(spark, reader=fake_reader)
+        assert set(calls) == set(all_table_schemas())
+        assert calls["mamba_flat_encounter_follow_up"] == "client_id"
+        assert calls["mamba_flat_encounter_follow_up_1"] == "client_id"
+        assert calls["mamba_dim_location"] is None
+    finally:
+        # the 1-column fakes must not stand in for the warehouse in
+        # later tests
+        for table in calls:
+            spark.catalog.dropTempView(table)
 
 
 # ---- CLI: reference config end-to-end -------------------------------------
@@ -436,6 +447,168 @@ def test_run_export_raw_facility_in_columns_sanitized_in_name(spark, tmp_path):
     assert os.path.basename(path) == "R_AdamaGeneralHospH9_Sene_2015.csv"
     lines = open(path).read().splitlines()
     assert lines[1].split(",")[3] == "Adama General_Hosp"
+
+
+# ---- concurrent reports ----------------------------------------------------
+
+
+def test_run_export_skips_a_failing_builder(spark, tmp_path, caplog):
+    def boom(s, window):
+        raise RuntimeError("broken report")
+
+    reg = ReportRegistry()
+    reg.register_builder("A", lambda s, w: s.range(2))
+    reg.register_builder("Boom", boom)
+    reg.register_builder("C", lambda s, w: s.range(3))
+    fac = FacilityIdentity("O", "A", "F", "H")
+    written = run_export(
+        spark, reg, fac, "Sene", 2015, str(tmp_path),
+        zip_name="exp", month_label="Sene", cleanup_csvs=False,
+    )
+    assert written["Boom"] is None
+    assert [
+        r.args[0] for r in caplog.records
+        if str(r.msg).startswith("Error executing query")
+    ] == ["Boom"]
+    assert len(open(written["A"]).read().splitlines()) == 3
+    assert len(open(written["C"]).read().splitlines()) == 4
+    with zipfile.ZipFile(tmp_path / "exp_packaged18.zip") as zf:
+        with zipfile.ZipFile(zf.open("exp.zip")) as inner_zf:
+            assert inner_zf.namelist() == [
+                os.path.basename(written["A"]),
+                os.path.basename(written["C"]),
+            ]
+
+
+def test_run_export_returns_reports_in_registry_order(spark, tmp_path):
+    import time
+
+    spark.createDataFrame([(1,)], "id long").createOrReplaceTempView("src6")
+    reg = ReportRegistry()
+    # later builders return first, so completion order is not registry order
+    for i in range(8):
+        def build(s, w, i=i):
+            time.sleep(0.05 * (8 - i))
+            return s.range(i + 1)
+
+        reg.register_builder(f"B{i}", build)
+    reg.register_sql("S", "SELECT id FROM src6")
+    fac = FacilityIdentity("O", "A", "F", "H")
+    written = run_export(
+        spark, reg, fac, "Sene", 2015, str(tmp_path),
+        month_label="Sene", cleanup_csvs=False,
+    )
+    assert list(written) == reg.names() == ["S"] + [f"B{i}" for i in range(8)]
+    for i in range(8):
+        assert len(open(written[f"B{i}"]).read().splitlines()) == i + 2
+
+
+def test_run_export_reports_run_under_callers_job_group(spark, tmp_path):
+    """More reports than cores, with a short switch interval: every
+    builder and every report's Spark jobs carry the caller's job group,
+    and each CSV holds its own builder's rows."""
+    import sys
+
+    sc = spark.sparkContext
+    seen = {}
+
+    def build(s, w, i):
+        seen[i] = sc.getLocalProperty("spark.jobGroup.id")
+        return s.range(i + 1)
+
+    reg = ReportRegistry()
+    for i in range(12):
+        reg.register_builder(f"R{i}", lambda s, w, i=i: build(s, w, i))
+    fac = FacilityIdentity("O", "A", "F", "H")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    sc.setJobGroup("export-under-test", "concurrent reports")
+    try:
+        written = run_export(
+            spark, reg, fac, "Sene", 2015, str(tmp_path),
+            month_label="Sene", cleanup_csvs=False,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sys.setswitchinterval(interval)
+    assert seen == {i: "export-under-test" for i in range(12)}
+    # each report collects its result at least once
+    assert len(sc.statusTracker().getJobIdsForGroup("export-under-test")) >= 12
+    for i in range(12):
+        assert len(open(written[f"R{i}"]).read().splitlines()) == i + 2
+
+
+def test_run_export_restores_ansi_when_a_report_raises(spark, tmp_path, monkeypatch):
+    from data_export_tool_spark.mamba import reports
+
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    seen = []
+
+    def boom(s, window):
+        seen.append(s.conf.get("spark.sql.ansi.enabled"))
+        raise RuntimeError("broken report")
+
+    reg = ReportRegistry()
+    reg.register_builder("Boom", boom)
+    fac = FacilityIdentity("O", "A", "F", "H")
+    assert run_export(spark, reg, fac, "Sene", 2015, str(tmp_path)) == {"Boom": None}
+    assert seen == ["false"]
+    assert spark.conf.get("spark.sql.ansi.enabled") == prior
+
+    # an error before the reports start propagates, and still restores
+    def no_wide(s):
+        raise RuntimeError("wide view failed")
+
+    monkeypatch.setattr(reports, "ensure_follow_up_wide", no_wide)
+    with pytest.raises(RuntimeError, match="wide view failed"):
+        run_export(spark, reg, fac, "Sene", 2015, str(tmp_path))
+    assert spark.conf.get("spark.sql.ansi.enabled") == prior
+
+
+def test_ensure_follow_up_wide_needs_encounter_id_in_every_shard(spark):
+    from data_export_tool_spark.mamba.reports import ensure_follow_up_wide
+    from data_export_tool_spark.mamba.schemas import NUM_SHARDS
+
+    names = ["mamba_flat_encounter_follow_up"] + [
+        f"mamba_flat_encounter_follow_up_{i}" for i in range(1, NUM_SHARDS)
+    ]
+    for name in names:
+        spark.range(1).withColumnRenamed("id", "encounter_id").createOrReplaceTempView(name)
+    spark.range(1).withColumnRenamed("id", "x").createOrReplaceTempView(names[-1])
+    assert ensure_follow_up_wide(spark) is None
+
+
+def test_run_export_leaves_no_cached_data(spark, tmp_path):
+    """The export releases everything it caches: the wide view and
+    anything a line-list builder caches along the way."""
+    from data_export_tool_spark.__main__ import register_parquet_warehouse
+    from data_export_tool_spark.mamba import linelists
+    from data_export_tool_spark.mamba.fixture_store import (
+        ensure_fixture_parquet,
+        fixture_dir,
+    )
+    from data_export_tool_spark.mamba.reports import FOLLOW_UP_WIDE_VIEW
+
+    ensure_fixture_parquet(seed=7, n_patients=40)
+    names = register_parquet_warehouse(spark, fixture_dir(7, 40))
+
+    def outcome(s, window):
+        tables = {n: s.table(n) for n in names}
+        return linelists.tx_curr_outcome(
+            tables, window.start, window.end, follow_up=s.table(FOLLOW_UP_WIDE_VIEW)
+        )
+
+    reg = ReportRegistry()
+    reg.register_builder("outcome", outcome)
+    fac = FacilityIdentity("O", "A", "F", "H")
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache_manager.numCachedEntries()
+    written = run_export(
+        spark, reg, fac, "Sene", 2015, str(tmp_path), cleanup_csvs=False,
+    )
+    assert written["outcome"] is not None
+    assert cache_manager.numCachedEntries() == cached
 
 
 def test_rewrite_follow_up_assembly_hvl_text():
